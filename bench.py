@@ -32,7 +32,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # N vs 4N proxy: local[2] vs local[8]. This VM's per-vCPU throughput drops
 # beyond ~16 procs (pure-CPU spin test: 8→32 procs = 2.87×, a 0.72 ceiling
 # before any Spark code runs), so 8→32 cannot evidence engine scaling;

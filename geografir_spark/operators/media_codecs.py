@@ -72,6 +72,9 @@ def sniff_codec(payload: bytes) -> str:
     # MP4-family: the size-prefixed 'ftyp' box sits at offset 4.
     if len(payload) >= 12 and payload[4:8] == b"ftyp":
         return "mp4"
+    # Raw MPEG audio (no ID3 tag): 11-bit frame sync 0xFFE.
+    if len(payload) >= 2 and payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0:
+        return "mp3"
     return "unknown"
 
 

@@ -178,6 +178,9 @@ def test_sniff_and_compressed_codecs_stay_honest():
     assert sniff_codec(b"\x89PNG\r\n\x1a\n") == "png"
     assert sniff_codec(b"\xff\xd8\xff\xe0JFIF") == "jpeg"
     assert sniff_codec(b"\x00\x00\x00\x18ftypmp42") == "mp4"
+    for frame_header in (b"\xff\xfb\x90\x64", b"\xff\xf3\x48\xc4",
+                         b"\xff\xfa\x92\x00"):
+        assert sniff_codec(frame_header) == "mp3"
     assert sniff_codec(encode_wav(np.zeros(4, dtype=np.int16))) == "wav"
     for payload, mt in [
         (b"\x89PNG\r\n\x1a\n....", "image"),
@@ -187,6 +190,8 @@ def test_sniff_and_compressed_codecs_stay_honest():
     ]:
         with pytest.raises(NotImplementedError, match="codec"):
             decode_media(payload, mt)
+    with pytest.raises(NotImplementedError, match="'mp3'"):
+        decode_media(b"\xff\xfb\x90\x64....", "audio")
 
 
 def test_decode_media_dispatch_meets_contract():

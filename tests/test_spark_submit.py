@@ -5,7 +5,9 @@ whose kernels import geografir_spark on executors."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -59,6 +61,36 @@ def test_spark_submit_py_files(tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
     assert lines, r.stdout[-2000:]
-    import json
-
     assert json.loads(lines[-1])["distinct_cells"] > 0
+
+
+IMPORT_FROM_ZIP = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import geografir_spark
+from geografir_spark.queries import QUERIES
+print(json.dumps({"pkg": geografir_spark.__file__, "names": list(QUERIES)}))
+"""
+
+
+def test_zip_import_keeps_definition_order(tmp_path):
+    """Importing the registry from the shipped zip is warning-free and
+    yields the same order as the checkout: the ``@register`` order."""
+    from geografir_spark import queries
+    from geografir_spark.shipping import package_zip
+
+    zip_path = package_zip()
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    r = subprocess.run(
+        [sys.executable, "-W", "error::RuntimeWarning", "-c", IMPORT_FROM_ZIP,
+         zip_path],
+        capture_output=True, text=True, timeout=120, cwd=str(tmp_path), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.splitlines()[-1])
+    assert out["pkg"].startswith(zip_path), out["pkg"]
+    with open(queries.__file__, encoding="utf-8") as f:
+        defined = re.findall(r'^@register\(\s*"([^"]+)"', f.read(), re.M)
+    assert len(defined) == len(queries.QUERIES)
+    assert out["names"] == defined
