@@ -188,7 +188,10 @@ def _make_spark(cores: int):
     from geografir_spark.session import get_spark
     from geografir_spark.shipping import ensure_shipped
 
-    spark = get_spark("geografir-bench", cores=cores)
+    spark = get_spark(
+        "geografir-bench", cores=cores,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     ensure_shipped(spark)
     return spark
 

@@ -40,6 +40,32 @@ def test_pip_join_empty_sides(spark, empty_points, some_points):
     # sanity: non-degenerate case finds the interior points
     assert spatial_join_pip(some_points, zones, res=6).count() > 0
 
+    # a zero-area polygon covers one cell but contains no point, even one
+    # sitting exactly on it
+    point_zone = spark.createDataFrame(
+        [(1, "POLYGON ((3.1 7.2, 3.1 7.2, 3.1 7.2, 3.1 7.2))")],
+        "zone_id bigint, geom_wkt string",
+    )
+    on_it = cells.with_cell(
+        spark.createDataFrame([(1, 3.1, 7.2)], "page_id bigint, lon double, lat double"),
+        "lon", "lat", 6,
+    )
+    for compact in (False, True):
+        assert spatial_join_pip(on_it, point_zone, res=6, compact_cover=compact).count() == 0
+        assert spatial_join_pip(some_points, point_zone, res=6, compact_cover=compact).count() == 0
+
+    # points with a null lon or lat fall in no polygon; the rest still join
+    with_nulls = cells.with_cell(
+        spark.createDataFrame(
+            [(1, None, None), (2, 1.0, None), (3, None, 1.0), (4, 1.0, 1.0)],
+            "page_id bigint, lon double, lat double",
+        ),
+        "lon", "lat", 6,
+    )
+    for compact in (False, True):
+        got = spatial_join_pip(with_nulls, zones, res=6, compact_cover=compact)
+        assert [r["page_id"] for r in got.collect()] == [4]
+
 
 def test_knn_k_exceeds_targets(spark, some_points):
     from geografir_spark.operators.knn import knn_join

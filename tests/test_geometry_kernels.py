@@ -304,6 +304,59 @@ def test_pip_join_compact_cover_equals_standard(spark):
     assert n_cmp < n_std / 3, (n_cmp, n_std)  # the broadcast actually shrinks
 
 
+def _pip_fixture(spark, tmp_path):
+    """A big rectangle (deep interior, so compaction really happens) and a
+    concave zone, over a deterministic point cloud stored as parquet."""
+    from geografir_spark.geo import cells as C
+
+    zones = spark.createDataFrame(
+        [
+            (1, "POLYGON ((-20 -15, 30 -15, 30 25, -20 25, -20 -15))"),
+            (2, "POLYGON ((-24 -19, 34 -19, 34 29, 5 0, -24 29, -24 -19))"),
+        ],
+        "zone_id LONG, geom_wkt STRING",
+    )
+    path = f"{tmp_path}/points"
+    spark.range(0, 4000).selectExpr(
+        "id AS point_id",
+        "-25.0 + (CAST(pmod(id * 2654435761, 97) AS DOUBLE) / 96.0) * 60.0 AS lon",
+        "-20.0 + (CAST(pmod(id * 40503, 89) AS DOUBLE) / 88.0) * 50.0 AS lat",
+    ).write.parquet(path)
+    return C.with_cell(spark.read.parquet(path), "lon", "lat", 8), zones
+
+
+@pytest.mark.parametrize("compact", [False, True])
+def test_pip_join_plan_is_single_pass(spark, tmp_path, compact):
+    """One join, one refine: the executed plan scans the points once,
+    broadcasts the cover once and runs exactly one Python kernel, `refine`
+    (the cover is built on the driver, not in a second mapInPandas)."""
+    from geografir_spark.operators.pip_join import spatial_join_pip
+
+    pts, zones = _pip_fixture(spark, tmp_path)
+    out = spatial_join_pip(pts, zones, res=8, compact_cover=compact)
+    assert len(out.collect()) > 0
+    # the executed (final) plan; AQE appends the initial plan after it
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    lines = plan.splitlines()
+    mip = [ln for ln in lines if "MapInPandas" in ln]
+    assert len(mip) == 1 and "MapInPandas refine(" in mip[0], plan
+    scans = [ln for ln in lines if "FileScan" in ln]
+    assert len(scans) == 1 and "FileScan parquet [point_id" in scans[0], plan
+    assert sum("BroadcastExchange" in ln for ln in lines) == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_pip_join_compact_releases_what_it_persists(spark, tmp_path):
+    """The compacted join leaves no persisted RDD behind."""
+    from geografir_spark.operators.pip_join import spatial_join_pip
+
+    pts, zones = _pip_fixture(spark, tmp_path)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert len(spatial_join_pip(pts, zones, res=8, compact_cover=True).collect()) > 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
+
+
 def test_simplify_ring_douglas_peucker():
     """DP simplification: collinear chains collapse, genuine corners stay,
     tolerance bounds the Hausdorff error, and PIP over the simplified
